@@ -31,7 +31,7 @@ other's caches. The session registry stays process-global under a lock;
 from __future__ import annotations
 
 import threading
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import DataFrame
 
@@ -111,13 +111,6 @@ def pin(df: DataFrame, storage_level=None) -> DataFrame:
         with _SESSION_LOCK:
             _SESSION_PINS.append(df)
     return df
-
-
-def detach_current_scope() -> Optional[PinScope]:
-    """Internal: pop the innermost scope without releasing (used when a
-    function conditionally keeps its pins alive)."""
-    stack = _scope_stack()
-    return stack.pop() if stack else None
 
 
 def release_pins() -> int:

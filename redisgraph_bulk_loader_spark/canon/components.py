@@ -11,13 +11,17 @@ Scale notes:
   it the plan doubles per iteration and the driver OOMs on planning)
 - convergence is detected with a one-action (count, xor-of-hashes)
   fingerprint of the edge set — no exceptAll anti-join per round
-- node ids are longs (hash or dense ids); callers map strings first
+- long node ids run the loop directly; any other orderable id type is
+  mapped to injective longs first and mapped back by a groupBy-min
 """
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def injective_node_ids(
@@ -110,6 +114,8 @@ def _driver_union_find(pairs) -> list:
 #: below this many distinct edges the distributed star loop is pure
 #: overhead (each round is several shuffle jobs); a driver union-find
 #: answers in milliseconds. Alias vocabularies sit far under this.
+#: Read at call time, so tests can force the distributed path by
+#: patching it to 0.
 DRIVER_CC_THRESHOLD = 100_000
 
 
@@ -119,18 +125,25 @@ def connected_components(
     dst: str = "v",
     *,
     max_iter: int = 30,
-    driver_threshold: int = DRIVER_CC_THRESHOLD,
+    driver_threshold: Optional[int] = None,
 ) -> DataFrame:
-    """edges(src,dst: long) -> (node: long, component: long) where
-    component is the minimum node id in the component. Covers every
-    node that appears in at least one edge; isolated nodes are the
-    caller's coalesce.
+    """edges(src, dst) -> (node, component) where component is the
+    minimum node id in the component. Ids keep their native type
+    (long, string, ... — anything Spark and Python order alike); null
+    ids and self-loops are dropped. Covers every node that appears in
+    at least one edge; isolated nodes are the caller's coalesce.
 
-    Size-gated: at or below ``driver_threshold`` distinct edges the
-    component assignment is computed with a driver-side union-find
-    (dim-scale sameAs graphs — the common KG-canonicalization case);
-    above it the O(log^2 n) distributed star loop runs. Pass
+    Size-gated on the distinct edge count: at or below
+    ``driver_threshold`` (default: ``DRIVER_CC_THRESHOLD``) the edges
+    are collected and a driver-side union-find assigns components, so
+    the driver holds at most ``DRIVER_CC_THRESHOLD`` edges (dim-scale
+    sameAs graphs and dedup pair sets — the common case). Above it the
+    O(log^2 n) distributed star loop runs: long ids directly, any
+    other type through collision-free injective longs, with each
+    component's minimum native id taken afterwards. Pass
     ``driver_threshold=0`` to force the distributed path."""
+    if driver_threshold is None:
+        driver_threshold = DRIVER_CC_THRESHOLD
     spark = edges.sparkSession
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -138,9 +151,12 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
+    id_type = e.schema["u"].dataType
+    schema = StructType([StructField("node", id_type),
+                         StructField("component", id_type)])
     n_edges = e.count()
     if n_edges == 0:
-        return spark.createDataFrame([], "node long, component long")
+        return spark.createDataFrame([], schema)
     if n_edges <= driver_threshold:
         assignments = _driver_union_find(
             (r["u"], r["v"]) for r in e.collect()
@@ -151,9 +167,32 @@ def connected_components(
         # batches decode JVM-side.
         import pandas as pd
 
-        pdf = pd.DataFrame(assignments, columns=["node", "component"]).astype(
-            "int64")
-        return spark.createDataFrame(pdf, schema="node long, component long")
+        pdf = pd.DataFrame(assignments, columns=["node", "component"])
+        return spark.createDataFrame(pdf, schema=schema)
+    if isinstance(id_type, LongType):
+        return _star_components(e, max_iter)
+    node_map = injective_node_ids(
+        e.select(F.col("u").alias("_id"))
+        .union(e.select(F.col("v").alias("_id"))),
+        "_id",
+    )
+    cc = _star_components(
+        e.join(node_map.select(F.col("_id").alias("u"),
+                               F.col("node").alias("_u")), "u")
+        .join(node_map.select(F.col("_id").alias("v"),
+                              F.col("node").alias("_v")), "v")
+        .select(F.col("_u").alias("u"), F.col("_v").alias("v")),
+        max_iter,
+    )
+    with_comp = node_map.join(cc, "node")
+    reps = with_comp.groupBy("component").agg(F.min("_id").alias("_rep"))
+    return with_comp.join(reps, "component").select(
+        F.col("_id").alias("node"), F.col("_rep").alias("component"))
+
+
+def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed large-star/small-star loop over deduplicated
+    long edges (u, v) -> (node, component = min node id)."""
     prev = None
     for _ in range(max_iter):
         # lazy checkpoint: the fingerprint action below both materializes

@@ -61,27 +61,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     return _bind_once(toks, from_toks)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """array<bigint> MinHash signature: per seed s, min over shingles of
-    xxhash64(shingle, s).
-
-    NOTE: higher-order-function form — evaluated *interpreted* (HOFs are
-    outside whole-stage codegen), fine for dim-scale columns. For fact
-    tables use ``minhash_signature_df`` (explode + codegen'd hash
-    projection + map-side-combined min aggregate), which is 10-100x
-    faster per row."""
-    # NB: the lambda must take exactly ONE arg — pyspark passes the
-    # element index to a second parameter, which would silently override
-    # a `s=s` default and collapse every seed to the element index.
-    def _mk(seed: int):
-        return lambda x: F.xxhash64(x, F.lit(seed))
-
-    sigs = [
-        F.array_min(F.transform(shingles, _mk(s))) for s in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 #: Mersenne prime 2^31-1 — the modulus of the portable MinHash seed
 #: mix. Products a*h stay under 2^62, inside BIGINT on both engines
 #: (Spark ANSI mode and DuckDB both reject int64 overflow).

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..canon import connected_components
 from ..functions.hashing import (
     band_buckets,
     hamming64,
@@ -195,70 +196,6 @@ def simhash_dup_pairs(
     )
 
 
-def _cc_assignments(pairs: DataFrame, id_col: str) -> DataFrame:
-    """(id, _rep) for every id appearing in a near-dup pair: connected
-    components over collision-free injective longs, representative =
-    min id per component. ``pairs`` must already be materialized
-    (checkpointed) by the caller — every frame here references it
-    several times. The reps join is size-gated on the member count
-    (an upper bound on cluster count): at web scale duplicates are
-    30-50% of the corpus, so an unconditional broadcast would OOM.
-
-    Size-gated like connected_components itself (r6): at or below
-    ``DRIVER_CC_THRESHOLD`` pairs the whole assignment runs as one
-    driver union-find over the NATIVE ids (collect + Arrow frame) —
-    the distributed path spends ~8 dim-scale shuffle/checkpoint jobs
-    (injective-id checkpoint + count + two mapping joins + CC + reps
-    join) deciding clusters a few thousand pairs define, and the
-    union-by-min union-find returns the identical min-id-per-component
-    answer (python `<` on longs/UTF-8 strings orders exactly like
-    Spark). Above the gate the distributed path is unchanged."""
-    from ..canon import connected_components
-    from ..canon.components import (
-        DRIVER_CC_THRESHOLD,
-        _driver_union_find,
-        injective_node_ids,
-    )
-    from .endpoints import BROADCAST_THRESHOLD_ROWS
-
-    n_pairs = pairs.count()  # pairs checkpointed — near-free
-    if n_pairs <= DRIVER_CC_THRESHOLD:
-        import pandas as pd
-
-        comp = dict(_driver_union_find(
-            (r["id_a"], r["id_b"]) for r in pairs.collect()
-        ))
-        pdf = pd.DataFrame(
-            sorted(comp.items()), columns=[id_col, "_rep"])
-        spark = pairs.sparkSession
-        id_type = pairs.schema["id_a"].dataType.simpleString()
-        if pdf.empty:
-            pdf = pdf.astype(object)
-        return spark.createDataFrame(
-            pdf, schema=f"{id_col} {id_type}, _rep {id_type}")
-
-    members = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    node_map = injective_node_ids(members, id_col)
-    n_members = node_map.count()  # pairs checkpointed — near-free
-    edges = (
-        pairs.join(node_map.select(F.col(id_col).alias("id_a"),
-                                   F.col("node").alias("u")), "id_a")
-        .join(node_map.select(F.col(id_col).alias("id_b"),
-                              F.col("node").alias("v")), "id_b")
-        .select("u", "v")
-    )
-    cc = connected_components(edges)
-    with_comp = node_map.join(cc, "node")
-    reps = with_comp.groupBy("component").agg(F.min(id_col).alias("_rep"))
-    if n_members <= BROADCAST_THRESHOLD_ROWS:
-        reps = F.broadcast(reps)
-    return with_comp.join(reps, "component").select(id_col, F.col("_rep"))
-
-
 def dedup_assignments(
     df: DataFrame,
     id_col: str,
@@ -299,16 +236,12 @@ def dedup_assignments(
     join: every pair, O(sum freq^2) shuffle — correctness tool, not the
     scale path.
 
-    Returns (id_col, rep_id). CC runs on collision-free injective
-    longs assigned over the pair-member vocabulary (bare xxhash64(id)
-    has a ~50% birthday collision at ~5e9 distinct ids — squarely
-    inside the 100 TB envelope, and one collision welds two clusters);
-    the representative is the min *string* id per component, so node
-    longs never surface."""
+    Returns (id_col, rep_id). Clusters come from
+    ``canon.connected_components`` over the verified pairs' native
+    ids, so the representative is the min id per component."""
     from ..cache import PinScope
 
-    # The pair join is the expensive plan and three consumers reference
-    # it (edges + both member projections): pin it eagerly. Near-dup
+    # The pair join is the expensive plan: pin it eagerly. Near-dup
     # pairs are O(duplicates), far smaller than the corpus. The eager
     # localCheckpoint cuts lineage, so the shingle-set cache the pair
     # generator pins internally is released right here instead of
@@ -388,7 +321,8 @@ def dedup_assignments(
         else:
             raise ValueError("method must be 'minhash' or 'exact'")
         pairs = pairs.localCheckpoint(eager=True)
-    assigned = _cc_assignments(pairs, id_col)
+    assigned = connected_components(pairs, "id_a", "id_b").select(
+        F.col("node").alias(id_col), F.col("component").alias("_rep"))
     if member_map is not None:
         # Fan cluster assignments back out: dup-group members inherit
         # their group rep's component rep (groups whose rep is in no
@@ -430,7 +364,7 @@ def embedding_dedup_assignments(
     """Embedding-cosine near-dup assignment — the vector twin of the
     text `dedup_assignments` composition: banded hyperplane self-join
     candidates + exact-cosine verification (`ann_self_join_pairs`) ->
-    connected components over injective longs -> one surviving
+    connected components over the native ids -> one surviving
     representative (min id) per cluster; vectors in no pair survive as
     themselves. Returns (id_col, rep_id).
 
@@ -446,7 +380,8 @@ def embedding_dedup_assignments(
             df, id_col=id_col, vec_col=vec_col, threshold=threshold,
             bits=bits, bands=bands, dim=dim, seed=seed,
         ).select("id_a", "id_b").localCheckpoint(eager=True)
-    assigned = _cc_assignments(pairs, id_col)
+    assigned = connected_components(pairs, "id_a", "id_b").select(
+        F.col("node").alias(id_col), F.col("component").alias("_rep"))
     return (
         df.select(id_col).distinct()
         .join(assigned, id_col, "left")

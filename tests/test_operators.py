@@ -592,6 +592,29 @@ class TestDedupAssignments:
         )
         assert self._run(spark) == self._EXPECT
 
+    def test_awkward_id_column_on_both_gate_sides(self, spark, monkeypatch):
+        """An id column named "doc id" (long ids) clusters identically
+        through the driver union-find and the distributed components
+        path; an exact copy (7 of 1) fans back out through the
+        collapse map."""
+        from redisgraph_bulk_loader_spark.canon import components
+        from redisgraph_bulk_loader_spark.operators.dedup import (
+            dedup_assignments,
+        )
+
+        rows = [(int(d[1:]), t) for d, t in self._DOCS]
+        rows.append((7, self._DOCS[0][1]))
+        docs = spark.createDataFrame(rows, "`doc id` long, text string")
+
+        def run():
+            return {r["doc id"]: r.rep_id for r in dedup_assignments(
+                docs, "doc id", "text", threshold=0.5).collect()}
+
+        driver = run()
+        monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 0)
+        assert run() == driver
+        assert driver == {1: 1, 2: 1, 3: 3, 4: 3, 5: 3, 6: 6, 7: 1}
+
     def test_reps_join_is_size_gated(self, spark, monkeypatch):
         """Above the broadcast threshold the representative join must
         fall back to a shuffle join and still produce the same
@@ -607,6 +630,7 @@ class TestDedupAssignments:
         totally colliding xxhash64."""
         import pyspark.sql.functions as SF
 
+        from redisgraph_bulk_loader_spark.canon import components
         from redisgraph_bulk_loader_spark.plans.pipeline import canonicalize
 
         lit = SF.lit
@@ -617,15 +641,17 @@ class TestDedupAssignments:
             [("Ada", "e1"), ("Ada", "e2"), ("Bob", "e3")],
             "surface string, canonical_id string",
         )
-        # driver_threshold=0 forces the distributed path — the gate's
-        # driver union-find never touches hashing to begin with
+        # a zero gate forces the distributed path — the gate's driver
+        # union-find never touches hashing to begin with
+        monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 0)
         remap = {r.canonical_id: r.canon_id
-                 for r in canonicalize(aliases, driver_threshold=0).collect()}
+                 for r in canonicalize(aliases).collect()}
         assert remap == {"e1": "e1", "e2": "e1", "e3": "e3"}
 
-    def test_canonicalize_gate_strategies_agree(self, spark):
+    def test_canonicalize_gate_strategies_agree(self, spark, monkeypatch):
         """Driver-gated and distributed canonicalization must produce
         the same remap (same criterion as the CC gate test)."""
+        from redisgraph_bulk_loader_spark.canon import components
         from redisgraph_bulk_loader_spark.plans.pipeline import canonicalize
 
         aliases = spark.createDataFrame(
@@ -634,8 +660,8 @@ class TestDedupAssignments:
             "surface string, canonical_id string",
         )
         drv = sorted(tuple(r) for r in canonicalize(aliases).collect())
-        dist = sorted(tuple(r) for r in canonicalize(
-            aliases, driver_threshold=0).collect())
+        monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 0)
+        dist = sorted(tuple(r) for r in canonicalize(aliases).collect())
         assert drv == dist
         assert dict(drv)["e5"] == "e1" and dict(drv)["e4"] == "e3"
 

@@ -197,12 +197,14 @@ class TestPlanShapes:
         assert out["ada"] == "e7"  # null extra did not shadow
         assert None not in out
 
-    def test_canonicalize_gate_paths_agree_on_long_ids(self, spark):
+    def test_canonicalize_gate_paths_agree_on_long_ids(self, spark,
+                                                       monkeypatch):
         """code-review r5: canonicalize must emit STRING ids on both
         gate branches (matching build_alias_dim), with the component
         representative picked by NATIVE ordering before the render —
         otherwise the remap join in build_graph compares string vs
         long and Spark's double coercion can weld 64-bit ids."""
+        from redisgraph_bulk_loader_spark.canon import components
         from redisgraph_bulk_loader_spark.plans.pipeline import canonicalize
 
         aliases = spark.createDataFrame(
@@ -210,7 +212,8 @@ class TestPlanShapes:
             "surface string, canonical_id long",
         )
         driver = canonicalize(aliases)  # 3 rows <= gate
-        dist = canonicalize(aliases, driver_threshold=0)
+        monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 0)
+        dist = canonicalize(aliases)
         for out in (driver, dist):
             assert [f.dataType.simpleString() for f in out.schema.fields] \
                 == ["string", "string"]
@@ -219,6 +222,36 @@ class TestPlanShapes:
         assert a == b
         assert dict(a)["10"] == "9" and dict(a)["9"] == "9"  # numeric min
         assert dict(a)["7"] == "7"
+
+    def test_canonicalize_null_surfaces_and_ids_link_nothing(self, spark,
+                                                             monkeypatch):
+        """A null surface is not a shared surface (nor the literal
+        "None" surface), and a null canonical_id is no entity: neither
+        welds components or yields a remap key — identically on both
+        sides of the components gate (the "Ada" weld reaches the
+        distributed path)."""
+        from redisgraph_bulk_loader_spark.canon import components
+        from redisgraph_bulk_loader_spark.plans.pipeline import canonicalize
+
+        schema = "surface string, canonical_id string"
+        null_surfaces = spark.createDataFrame(
+            [(None, "e1"), (None, "e2"), ("Bob", "e3"), ("None", "e4")],
+            schema)
+        null_ids = spark.createDataFrame(
+            [("Ada", "e1"), ("Ada", None), ("Ada", "e2"), (None, None),
+             ("Bob", "e3")],
+            schema)
+
+        def remaps():
+            return [{r.canonical_id: r.canon_id
+                     for r in canonicalize(df).collect()}
+                    for df in (null_surfaces, null_ids)]
+
+        driver = remaps()
+        monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 0)
+        assert remaps() == driver
+        assert driver[0] == {"e1": "e1", "e2": "e2", "e3": "e3", "e4": "e4"}
+        assert driver[1] == {"e1": "e1", "e2": "e1", "e3": "e3"}
 
     def test_whole_stage_codegen_on_agg(self, spark):
         li = spark.read.parquet(os.path.join(SF, "lineitem.parquet"))
